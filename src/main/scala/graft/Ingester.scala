@@ -16,7 +16,8 @@ import graft.sources.{DocumentSource, Gazetteer}
  *   1  EXTRACT_TEXT          scanDirectory + extractText
  *   2  FIND_NAMED_ENTITIES   extractMentions (pluggable tagger seam)
  *   3  POPULATE_GRAPH_DB     — plain DataFrames; no separate store
- *   4-6 PROCESS_*            withinDoc + acrossDoc coref (person/org/loc)
+ *   4-6 PROCESS_*            one type-keyed coref pass for person/org/loc
+ *                            (Coref.withinDocAll + acrossDocAll)
  *   7  GEOCODE               Geocode.run over the gazetteer
  *   8  PRECOMPUTE_COUNTS     SocialNetwork.documentEntityCounts
  *   9  INDEX_DOCS            — out-of-engine (Lucene); text predicates cover
@@ -60,27 +61,16 @@ object Ingester {
       documentEntity: DataFrame,
       geolocation: DataFrame)
 
-  /** Steps 4-6 for one entity type; returns (entities, mention→entity). */
-  def corefType(mentions: DataFrame, within: Coref.WithinDocParams,
-      across: Coref.AcrossDocParams): (DataFrame, DataFrame) = {
-    val w = Coref.withinDoc(mentions, within)
-    val a = Coref.acrossDoc(w.entities, across)
+  /** Steps 4-6: one type-keyed coref pass over person/org/loc mentions;
+    * returns (entities, mention→entity). */
+  def corefAll(mentions: DataFrame): (DataFrame, DataFrame) = {
+    val w = Coref.withinDocAll(mentions, Coref.WithinDocParams.all)
+    val a = Coref.acrossDocAll(w.entities, Coref.AcrossDocParams.all)
     val finalAssign = w.assignment
       .withColumnRenamed("entity_id", "within_id")
       .join(a.assignment.withColumnRenamed("entity_id", "within_id"), "within_id")
       .select(col("mention_id"), col("new_entity_id").as("entity_id"))
     (a.entities, finalAssign)
-  }
-
-  /** Steps 4-6 for all three entity types (person/org/loc), unioned. */
-  def corefAll(mentions: DataFrame): (DataFrame, DataFrame) = {
-    val passes = Seq(
-      (Coref.WithinDocParams.person, Coref.AcrossDocParams.person),
-      (Coref.WithinDocParams.organization, Coref.AcrossDocParams.organization),
-      (Coref.WithinDocParams.location, Coref.AcrossDocParams.location))
-    val results = passes.map { case (w, a) => corefType(mentions, w, a) }
-    (results.map(_._1).reduce(_.unionByName(_)),
-      results.map(_._2).reduce(_.unionByName(_)))
   }
 
   def run(spark: SparkSession, cfg: Config): Result = {
@@ -90,7 +80,7 @@ object Ingester {
       .filter(col("text").isNotNull)
     val mentions = DocumentSource.extractMentions(docs, cfg.tagger)
 
-    // 4-6: coref per type (person/org/loc), union results.
+    // 4-6: one coref pass over all three types (person/org/loc).
     val (entities, assignment) = corefAll(mentions)
 
     // 7: geocode locations against the gazetteer.

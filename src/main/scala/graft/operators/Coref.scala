@@ -25,10 +25,17 @@ import graft.functions._
  * reference's absorb-into-current-key behaviour on equal sizes
  * (CorefBase.groovy:203-209).
  *
+ * Steps 4-6 (person/org/loc) run as ONE type-keyed pass ([[withinDocAll]],
+ * [[acrossDocAll]]): per-type parameters are per-row columns and every
+ * window, group and join key carries the type.
+ *
  * Entity ids are content-derived (xxhash64 over type/provenance/scope/text,
- * SURVEY.md §7.4(8)) so results are stable across runs and cluster sizes.
+ * SURVEY.md §7.4(8)) so results are stable across runs and cluster sizes;
+ * hashing the type and provenance columns gives the one-type ids exactly.
  */
 object Coref {
+
+  sealed trait TypeParams { def entityType: String } // keyed on by [[perType]]
 
   /** Within-document pass parameterization (per entity type). */
   final case class WithinDocParams(
@@ -36,7 +43,7 @@ object Coref {
       createdBy: String,
       junkChars: String,
       matchNumbersExactly: Boolean,
-      firstnameMerge: Boolean)
+      firstnameMerge: Boolean) extends TypeParams
 
   object WithinDocParams {
     /** WithinDocPerCoref.groovy:36-53: numbers not matched, firstname folding on. */
@@ -51,6 +58,7 @@ object Coref {
     val location: WithinDocParams =
       WithinDocParams("LOCATION", "within_doc_location_coref", JunkCharsForLocs,
         matchNumbersExactly = true, firstnameMerge = true)
+    val all: Seq[WithinDocParams] = Seq(person, organization, location)
   }
 
   /** Across-document pass parameterization (per entity type). */
@@ -62,7 +70,7 @@ object Coref {
       numTokensMax: Int,
       numCharsMin: Int,
       charsetRegex: Option[String],
-      minNumDocs: Int = 2)
+      minNumDocs: Int = 2) extends TypeParams
 
   object AcrossDocParams {
     /** AcrossDocPerCoref.groovy:31-43,49-55: 2..6 tokens, ≥5 chars, letters/dots/space. */
@@ -77,23 +85,36 @@ object Coref {
     val location: AcrossDocParams = AcrossDocParams("LOCATION",
       "across_doc_location_coref", "weak_across_doc_location_coref",
       1, 10, 2, None)
+    val all: Seq[AcrossDocParams] = Seq(person, organization, location)
   }
 
   /** Result: `entities` table + `mentionMap`/`entityMap` assignment. */
   final case class CorefResult(entities: DataFrame, assignment: DataFrame)
 
-
-  /** Fuzzy-merge predicate: Levenshtein ≤ 1 (`score > -1.1`,
-    * WithinDocPerCoref.groovy:36-37) + optional digit-run guard. The
-    * bounded 3-arg levenshtein early-exits past the threshold (O(n·k)
-    * band instead of the full DP; returns -1 when distance > 1). */
-  private def closeMatch(a: Column, b: Column, matchNumbers: Boolean): Column = {
-    val base = levenshtein(a, b, 1) >= 0
-    if (matchNumbers) base && (digit_runs(a) === digit_runs(b)) else base
+  /** A per-type parameter as a per-row column: a `when` chain over `ps`
+    * keyed on the row's type `tpe` (null for a type not in `ps`). */
+  private def perType[P <: TypeParams](tpe: Column, ps: Seq[P])(v: P => Column): Column = {
+    require(ps.map(_.entityType).distinct.size == ps.size, "one parameter set per type")
+    ps.tail.foldLeft(when(tpe === ps.head.entityType, v(ps.head)))(
+      (c, p) => c.when(tpe === p.entityType, v(p)))
   }
 
+  /** Fuzzy-merge predicate: Levenshtein ≤ 1 (`score > -1.1`,
+    * WithinDocPerCoref.groovy:36-37) + digit-run guard where `matchNumbers`.
+    * The bounded 3-arg levenshtein early-exits past the threshold (O(n·k)
+    * band instead of the full DP; returns -1 when distance > 1). */
+  private def closeMatch(a: Column, b: Column, matchNumbers: Column): Column =
+    levenshtein(a, b, 1) >= 0 && (!matchNumbers || (digit_runs(a) === digit_runs(b)))
+
+  /** Within-document coreference for one entity type. */
+  def withinDoc(mentions: DataFrame, p: WithinDocParams): CorefResult =
+    withinDocAll(mentions, Seq(p))
+
   /**
-   * Within-document coreference for one entity type.
+   * Within-document coreference for every type in `ps` in one pass. Each
+   * type's parameters become per-row columns ([[perType]]) and every
+   * window, group and join key carries `mention_type`, so the same text
+   * under two types in one doc stays two clusters.
    *
    * @param mentions columns (doc_id: long, mention_id: long,
    *                 mention_type: string, text: string)
@@ -101,37 +122,38 @@ object Coref {
    *         created_by, num_mentions, num_docs)
    *         + assignment (mention_id, entity_id)
    */
-  def withinDoc(mentions: DataFrame, p: WithinDocParams): CorefResult = {
+  def withinDocAll(mentions: DataFrame, ps: Seq[WithinDocParams]): CorefResult = {
+    val tpe = col("mention_type")
+    val param = perType(tpe, ps) _
     // R16: normalize, drop empties. Persisted: reused by the edge windows,
     // the component join and the assignment join — recomputing the
     // normalize+explode lineage 4× dominated the pipeline cost otherwise.
     val normed = CacheScope.pin(mentions
-      .filter(col("mention_type") === p.entityType)
-      .withColumn("norm", normalize_str(col("text"), p.junkChars))
+      .filter(tpe.isin(ps.map(_.entityType): _*))
+      .withColumn("norm", param(p => normalize_str(col("text"), p.junkChars)))
       .filter(col("norm") =!= ""))
 
-    // R25: exact clusters per (doc, normalized text).
-    val keys = normed.groupBy(col("doc_id"), col("norm"))
-      .agg(count(lit(1)).as("cnt"))
+    // R25: exact clusters per (doc, type, normalized text).
+    val keys = normed.groupBy(col("doc_id"), tpe, col("norm")).agg(count(lit(1)).as("cnt"))
 
     // R33 stage 1 — combineAdjacentClose: Levenshtein merge edges connect
     // only keys ADJACENT in the per-doc sorted order, so components are
     // contiguous runs — one window pass with a cumulative segment counter,
     // no iterative connected components. Survivor = larger cluster, ties
     // to the later (greater) key (CorefBase.groovy:203-209).
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("norm"))
+    val w = Window.partitionBy(col("doc_id"), tpe).orderBy(col("norm"))
     val stage1 = keys
       .withColumn("prev", lag(col("norm"), 1).over(w))
       .withColumn("edge", col("prev").isNotNull &&
-        closeMatch(col("prev"), col("norm"), p.matchNumbersExactly))
+        closeMatch(col("prev"), col("norm"), param(p => lit(p.matchNumbersExactly))))
       .withColumn("comp",
         sum(when(col("edge"), 0).otherwise(1))
           .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select(col("doc_id"), col("norm"), col("cnt"), col("comp"))
+      .select(col("doc_id"), tpe, col("norm"), col("cnt"), col("comp"))
       .transform(CacheScope.pin(_))
 
     val clusters1 = stage1
-      .groupBy(col("doc_id"), col("comp"))
+      .groupBy(col("doc_id"), tpe, col("comp"))
       .agg(
         max_by(col("norm"), struct(col("cnt"), col("norm"))).as("key1"),
         sum(col("cnt")).as("cnt1"))
@@ -141,153 +163,138 @@ object Coref {
     // absorbed keys — CorefBase.groovy:95-133): a first-name key folds
     // into the immediately following SURVIVING key when it is its unique
     // ≥2-char prefix extension; fold chains resolve to the run's last
-    // (greatest) key, which is the reference's final absorb target.
-    val clusters2 = if (!p.firstnameMerge) {
-      clusters1.select(col("doc_id"), col("key1"), col("cnt1"),
-        col("key1").as("entity_text"))
-    } else {
-      val w2 = Window.partitionBy(col("doc_id")).orderBy(col("key1"))
-      // Uniqueness guard: a following key that extends prevk disqualifies
-      // the fold (prevk is an ambiguous first name) — UNLESS it extends
-      // key1 itself, which in the reference takes the detection branch
-      // (CorefBase.groovy:108-112) and never increments prevk's extension
-      // count, so chains FIRST / FIRST LAST / FIRST LAST SUFFIX chain-merge.
-      val fnWithPrev = col("prevk").isNotNull && length(col("prevk")) >= 2 &&
-        col("key1").startsWith(col("prevk")) && col("key1") =!= col("prevk") &&
-        (col("next1").isNull || !col("next1").startsWith(col("prevk")) ||
-          col("next1").startsWith(col("key1")))
-      // Survivor = segment max, taken as a window over (doc, comp2): the
-      // rows are already partitioned/sorted for w2, so this adds no
-      // shuffle — vs the groupBy+join-back alternative (one extra
-      // exchange + join in the pipeline's hottest path).
-      clusters1
-        .withColumn("prevk", lag(col("key1"), 1).over(w2))
-        .withColumn("next1", lead(col("key1"), 1).over(w2))
-        .withColumn("fold", fnWithPrev)
-        .withColumn("comp2",
-          sum(when(col("fold"), 0).otherwise(1))
-            .over(w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("entity_text",
-          max(col("key1")).over(Window.partitionBy(col("doc_id"), col("comp2"))))
-        .select(col("doc_id"), col("key1"), col("cnt1"), col("entity_text"))
-    }
+    // (greatest) key, which is the reference's final absorb target. Types
+    // without firstname folding never fold, so each key is its own entity.
+    val w2 = Window.partitionBy(col("doc_id"), tpe).orderBy(col("key1"))
+    // Uniqueness guard: a following key that extends prevk disqualifies
+    // the fold (prevk is an ambiguous first name) — UNLESS it extends
+    // key1 itself, which in the reference takes the detection branch
+    // (CorefBase.groovy:108-112) and never increments prevk's extension
+    // count, so chains FIRST / FIRST LAST / FIRST LAST SUFFIX chain-merge.
+    val fnWithPrev = param(p => lit(p.firstnameMerge)) &&
+      col("prevk").isNotNull && length(col("prevk")) >= 2 &&
+      col("key1").startsWith(col("prevk")) && col("key1") =!= col("prevk") &&
+      (col("next1").isNull || !col("next1").startsWith(col("prevk")) ||
+        col("next1").startsWith(col("key1")))
+    // Survivor = segment max, taken as a window over (doc, type, comp2):
+    // the rows are already partitioned/sorted for w2, so this adds no
+    // shuffle — vs the groupBy+join-back alternative (one extra
+    // exchange + join in the pipeline's hottest path).
+    val keyToEntity = CacheScope.pin(clusters1
+      .withColumn("prevk", lag(col("key1"), 1).over(w2))
+      .withColumn("next1", lead(col("key1"), 1).over(w2))
+      .withColumn("fold", fnWithPrev)
+      .withColumn("comp2",
+        sum(when(col("fold"), 0).otherwise(1))
+          .over(w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("entity_text",
+        max(col("key1")).over(Window.partitionBy(col("doc_id"), tpe, col("comp2"))))
+      .select(col("doc_id"), tpe, col("key1"), col("cnt1"), col("entity_text")))
 
-    def entityId(text: Column): Column =
-      xxhash64(lit(p.entityType), lit(p.createdBy), col("doc_id"), text)
-
-    val keyToEntity = CacheScope.pin(clusters2)
+    val createdBy = param(p => lit(p.createdBy))
+    def entityId(text: Column): Column = xxhash64(tpe, createdBy, col("doc_id"), text)
 
     val entities = keyToEntity
-      .groupBy(col("doc_id"), col("entity_text"))
+      .groupBy(col("doc_id"), tpe, col("entity_text"))
       .agg(sum(col("cnt1")).as("num_mentions"))
-      .select(
-        entityId(col("entity_text")).as("entity_id"),
-        col("doc_id"),
-        lit(p.entityType).as("entity_type"),
-        col("entity_text"),
-        lit(p.createdBy).as("created_by"),
-        col("num_mentions"),
-        lit(1L).as("num_docs"))
+      .select(entityId(col("entity_text")).as("entity_id"), col("doc_id"),
+        tpe.as("entity_type"), col("entity_text"), createdBy.as("created_by"),
+        col("num_mentions"), lit(1L).as("num_docs"))
 
     val assignment = normed
-      .select(col("mention_id"), col("doc_id"), col("norm"))
-      .join(stage1.select(col("doc_id"), col("norm"), col("comp")),
-        Seq("doc_id", "norm"))
-      .join(clusters1.select(col("doc_id"), col("comp"), col("key1")),
-        Seq("doc_id", "comp"))
-      .join(keyToEntity.select(col("doc_id"), col("key1"), col("entity_text")),
-        Seq("doc_id", "key1"))
+      .select(col("mention_id"), col("doc_id"), tpe, col("norm"))
+      .join(stage1.select(col("doc_id"), tpe, col("norm"), col("comp")),
+        Seq("doc_id", "mention_type", "norm"))
+      .join(clusters1.select(col("doc_id"), tpe, col("comp"), col("key1")),
+        Seq("doc_id", "mention_type", "comp"))
+      .join(keyToEntity.select(col("doc_id"), tpe, col("key1"), col("entity_text")),
+        Seq("doc_id", "mention_type", "key1"))
       .select(col("mention_id"), entityId(col("entity_text")).as("entity_id"))
 
     CorefResult(entities, assignment)
   }
 
+  /** Across-document coreference for one entity type. */
+  def acrossDoc(entities: DataFrame, p: AcrossDocParams): CorefResult =
+    acrossDocAll(entities, Seq(p))
+
   /**
-   * Across-document coreference for one entity type over the within-doc
-   * entity table. Strong candidates get the fuzzy pass + MIN_NUM_DOCS
-   * filter; weak candidates are exact-merged only but ALWAYS re-tagged with
-   * the weak provenance (mergeClusters runs on every weak cluster incl.
-   * singletons — AcrossDocPerCoref.groovy:114). Strong clusters below
-   * MIN_NUM_DOCS stay as their untouched within-doc entities.
+   * Across-document coreference for every type in `ps` over the within-doc
+   * entity table, in one pass: per-type parameters are per-row columns and
+   * every group and join key carries `entity_type`. Strong candidates get
+   * the fuzzy pass + MIN_NUM_DOCS filter; weak candidates are exact-merged
+   * only but ALWAYS re-tagged with the weak provenance (mergeClusters runs
+   * on every weak cluster incl. singletons — AcrossDocPerCoref.groovy:114).
+   * Strong clusters below MIN_NUM_DOCS stay as their untouched within-doc
+   * entities.
    *
    * @param entities within-doc entity table (schema of [[withinDoc]] output)
-   * @return entities: post-pass entity table for this type;
+   * @return entities: post-pass entity table for these types;
    *         assignment: (entity_id → new_entity_id) for every input entity.
    */
-  def acrossDoc(entities: DataFrame, p: AcrossDocParams): CorefResult = {
-    val input = CacheScope.pin(
-      entities.filter(col("entity_type") === p.entityType))
-    val pred = candidate_predicate(col("entity_text"),
-      p.numCharsMin, p.numTokensMax, p.numTokensMin, p.charsetRegex)
+  def acrossDocAll(entities: DataFrame, ps: Seq[AcrossDocParams]): CorefResult = {
+    val tpe = col("entity_type")
+    val param = perType(tpe, ps) _
+    val input = CacheScope.pin(entities.filter(tpe.isin(ps.map(_.entityType): _*)))
+    val pred = param(p => candidate_predicate(col("entity_text"),
+      p.numCharsMin, p.numTokensMax, p.numTokensMin, p.charsetRegex))
     val strong = input.filter(pred)
     val weak = input.filter(!pred)
 
     // ----- strong branch: exact + global sorted-neighborhood fuzzy merge.
     // Merge edges only connect globally sort-adjacent keys, so components
     // are contiguous runs: SortedSegments resolves them in one range
-    // shuffle + O(partitions) driver stitching (no iterative CC).
-    val keys = CacheScope.pin(strong.groupBy(col("entity_text"))
-      .agg(count(lit(1)).as("n_entities"), sum(col("num_mentions")).as("mentions")))
-    val labels = SortedSegments.assign(keys.select(col("entity_text")),
-      (a, b) => closeMatch(a, b, matchNumbers = true))
+    // shuffle + O(partitions) driver stitching (no iterative CC). All
+    // types share the run: keys are type-prefixed and the edge predicate
+    // never links two types.
+    val keys = CacheScope.pin(strong.groupBy(tpe, col("entity_text"))
+      .agg(count(lit(1)).as("n_entities"), sum(col("num_mentions")).as("mentions"))
+      .withColumn("tk", SortedSegments.typedKey(tpe, col("entity_text"))))
+    val labels = SortedSegments.assign(keys.select(col("tk")),
+      SortedSegments.sameType((a, b) => closeMatch(a, b, lit(true))))
 
     val withComp = keys
-      .join(labels, keys("entity_text") === labels("k"))
-      .drop("k")
+      .join(labels, keys("tk") === labels("k"))
+      .drop("k", "tk")
 
     // Survivor = most common member text; ties go to the lexicographically
     // SMALLEST text (Groovy Map.max picks the first maximal entry in sorted
     // insertion order — CorefBase.groovy:232, SURVEY §7.4(2)).
-    val perComp = withComp.groupBy(col("comp")).agg(
+    val perComp = withComp.groupBy(tpe, col("comp")).agg(
       min_by(col("entity_text"), struct((-col("n_entities")).as("neg"), col("entity_text")))
-        .as("survivor"),
-      sum(col("n_entities")).as("n_entities"),
+        .as("entity_text"),
+      sum(col("n_entities")).as("num_docs"),
       sum(col("mentions")).as("num_mentions"))
 
-    val merged = perComp.filter(col("n_entities") >= p.minNumDocs)
+    // Merged and weak clusters become across-doc entities (no doc_id).
+    def provenance(clusters: DataFrame, createdBy: Column): DataFrame = clusters
+      .withColumn("created_by", createdBy).withColumn("doc_id", lit(null).cast("long"))
+      .withColumn("entity_id", xxhash64(tpe, col("created_by"), col("entity_text")))
+    val merged = provenance(perComp.filter(col("num_docs") >= param(p => lit(p.minNumDocs))),
+      param(p => lit(p.createdBy)))
 
-    val mergedEntities = merged.select(
-      xxhash64(lit(p.entityType), lit(p.createdBy), col("survivor")).as("entity_id"),
-      lit(null).cast("long").as("doc_id"),
-      lit(p.entityType).as("entity_type"),
-      col("survivor").as("entity_text"),
-      lit(p.createdBy).as("created_by"),
-      col("num_mentions"),
-      col("n_entities").cast("long").as("num_docs"))
-
-    val strongWithComp = strong.join(withComp.select(col("entity_text"), col("comp")),
-      Seq("entity_text"))
+    val strongWithComp = strong.join(withComp.select(tpe, col("entity_text"), col("comp")),
+      Seq("entity_type", "entity_text"))
     val mergedAssign = strongWithComp
-      .join(merged.select(col("comp"), col("survivor")), Seq("comp"))
-      .select(col("entity_id"),
-        xxhash64(lit(p.entityType), lit(p.createdBy), col("survivor")).as("new_entity_id"))
+      .join(merged.select(tpe, col("comp"), col("entity_id").as("new_entity_id")),
+        Seq("entity_type", "comp"))
+      .select(col("entity_id"), col("new_entity_id"))
     val untouched = strongWithComp
-      .join(merged.select(col("comp")), Seq("comp"), "left_anti")
-      .drop("comp")
+      .join(merged.select(tpe, col("comp")), Seq("entity_type", "comp"), "left_anti")
 
     // ----- weak branch: exact merge of everything, weak provenance.
-    val weakAgg = weak.groupBy(col("entity_text"))
-      .agg(sum(col("num_mentions")).as("num_mentions"),
-        count(lit(1)).cast("long").as("num_docs"))
-    val weakEntities = weakAgg.select(
-      xxhash64(lit(p.entityType), lit(p.weakCreatedBy), col("entity_text")).as("entity_id"),
-      lit(null).cast("long").as("doc_id"),
-      lit(p.entityType).as("entity_type"),
-      col("entity_text"),
-      lit(p.weakCreatedBy).as("created_by"),
-      col("num_mentions"),
-      col("num_docs"))
-    val weakAssign = weak.select(col("entity_id"),
-      xxhash64(lit(p.entityType), lit(p.weakCreatedBy), col("entity_text"))
-        .as("new_entity_id"))
+    val weakEntities = provenance(weak.groupBy(tpe, col("entity_text"))
+      .agg(sum(col("num_mentions")).as("num_mentions"), count(lit(1)).as("num_docs")),
+      param(p => lit(p.weakCreatedBy)))
+    val weakAssign = weak.select(col("entity_id"), xxhash64(tpe,
+      param(p => lit(p.weakCreatedBy)), col("entity_text")).as("new_entity_id"))
 
-    val outEntities = mergedEntities
-      .unionByName(weakEntities)
-      .unionByName(untouched.select(mergedEntities.columns.map(col): _*))
-    val assignment = mergedAssign
-      .unionByName(weakAssign)
-      .unionByName(untouched.select(col("entity_id"),
-        col("entity_id").as("new_entity_id")))
+    val outCols = Seq("entity_id", "doc_id", "entity_type", "entity_text",
+      "created_by", "num_mentions", "num_docs").map(col)
+    val outEntities = Seq(merged, weakEntities, untouched)
+      .map(_.select(outCols: _*)).reduce(_.unionByName(_))
+    val assignment = mergedAssign.unionByName(weakAssign)
+      .unionByName(untouched.select(col("entity_id"), col("entity_id").as("new_entity_id")))
     CorefResult(outEntities, assignment)
   }
 

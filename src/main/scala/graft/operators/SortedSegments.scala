@@ -33,6 +33,23 @@ import org.apache.spark.sql.functions._
  */
 object SortedSegments {
 
+  /** Separator of a type-keyed key: NUL sorts below every character, so
+    * each type's keys form one contiguous run, ordered as their texts. */
+  private val TypeSep = "\u0000"
+
+  /** Key of `key` in the key space of `tpe`: several independent key
+    * spaces (e.g. one per entity type) then share one [[assign]] run. */
+  def typedKey(tpe: Column, key: Column): Column = concat(tpe, lit(TypeSep), key)
+
+  /** Edge predicate over [[typedKey]] keys: keys of different types never
+    * link, whatever `edgeCond` says of their texts; same-type keys link
+    * when `edgeCond` holds on the texts. */
+  def sameType(edgeCond: (Column, Column) => Column): (Column, Column) => Column = {
+    (a, b) =>
+      val (pa, pb) = (split(a, TypeSep, 2), split(b, TypeSep, 2))
+      pa.getItem(0) === pb.getItem(0) && edgeCond(pa.getItem(1), pb.getItem(1))
+  }
+
   def assign(keys: DataFrame, edgeCond: (Column, Column) => Column,
       numPartitions: Int = 0): DataFrame = {
     val spark = keys.sparkSession

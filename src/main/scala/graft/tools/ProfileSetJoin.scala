@@ -66,6 +66,8 @@ object ProfileSetJoin {
       .join(tk.select(col("id").as("b"), col("s")), Seq("b", "s"))
       .groupBy(col("a"), col("b"), col("sz_a"), col("sz_b"))
       .agg(count(lit(1)).as("inter"))
+    // Deliberately the OLD join-back verify shape, kept for comparison:
+    // the end-to-end stage below times the shipped array-intersect verify.
     time("verify joins + agg")(noop(inter))
     time("full operator end-to-end")(noop(
       graft.operators.SetJoin.prefixJaccardJoin(docs, "doc_id", "text",

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -15,6 +16,8 @@ import graft.operators.Coref
  *  2. VALIDITY: every pair we merge is connected by a chain of sorted-
  *     adjacent close/prefix links (never an arbitrary merge).
  *  3. Conservation: every mention assigned exactly once; entity stats sum.
+ *  4. The one type-keyed pass over all three types equals the union of
+ *     the per-type passes.
  */
 class CorefPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -229,6 +232,55 @@ class CorefPropertySpec extends SparkSpec {
       val totalIn = ents.map(_.numMentions).sum
       val totalOut = mine.entities.agg(sum("num_mentions")).as[Long].head()
       assert(totalOut == totalIn)
+    }
+  }
+
+  test("one type-keyed pass equals the union of the per-type passes") {
+    // Per doc: random persons, digit-run orgs built from person first names
+    // (their texts sort next to the person keys), random locations, plus
+    // fixed rows: one text tagged PERSON and LOCATION in the same doc, and
+    // a location first-name fold (ZONA → ZONA NORTE).
+    val mentionGen = Gen.oneOf(
+      nameGen.map(("PERSON", _)),
+      for (first <- Gen.oneOf("JOHN", "JON", "ANA", "ANNA"); n <- Gen.choose(10, 12))
+        yield ("ORGANIZATION", s"$first $n"),
+      Gen.oneOf("ZONA", "ZONE", "ZONA NORTE", "SECTOR 10", "SECTOR 11").map(("LOCATION", _)))
+    val fixed = Seq(("PERSON", "San Marcos"), ("LOCATION", "san marcos"),
+      ("LOCATION", "Zona"), ("LOCATION", "Zona Norte"), ("ORGANIZATION", "JOHN 12"))
+    val within = Coref.WithinDocParams.all
+    val across = Coref.AcrossDocParams.all
+    // Each side is computed once (localCheckpoint), then compared as
+    // multisets: exceptAll empty both ways.
+    def same(fused: DataFrame, perType: Seq[DataFrame], what: String): Unit = {
+      val (a, b) = (fused.localCheckpoint(), perType.reduce(_.unionByName(_)).localCheckpoint())
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, what)
+    }
+
+    (1L to 2L).foreach { seed =>
+      val rows = (0 until 5).flatMap { d =>
+        val drawn = Gen.listOfN(16, mentionGen)(Gen.Parameters.default, Seed(seed * 90 + d))
+          .getOrElse(Nil)
+        (fixed ++ drawn).zipWithIndex.map { case ((t, text), i) =>
+          (d.toLong, d.toLong * 1000 + i, t, text)
+        }
+      }
+      val df = rows.toDF("doc_id", "mention_id", "mention_type", "text")
+
+      val fusedW = Coref.withinDocAll(df, within)
+      val fusedA = Coref.acrossDocAll(fusedW.entities, across)
+      val typeW = within.map(Coref.withinDoc(df, _))
+      val typeA = typeW.zip(across).map { case (w, a) => Coref.acrossDoc(w.entities, a) }
+      same(fusedW.entities, typeW.map(_.entities), s"seed $seed: within entities")
+      same(fusedW.assignment, typeW.map(_.assignment), s"seed $seed: within assignment")
+      same(fusedA.entities, typeA.map(_.entities), s"seed $seed: across entities")
+      same(fusedA.assignment, typeA.map(_.assignment), s"seed $seed: across assignment")
+
+      // The shared text stays one entity per type, and the fold happened.
+      val texts = fusedA.entities.select("entity_type", "entity_text")
+        .as[(String, String)].collect().toSet
+      assert(texts(("PERSON", "SAN MARCOS")) && texts(("LOCATION", "SAN MARCOS")))
+      assert(texts(("LOCATION", "ZONA NORTE")) && !texts(("LOCATION", "ZONA")),
+        s"seed $seed: ZONA must fold into ZONA NORTE")
     }
   }
 }

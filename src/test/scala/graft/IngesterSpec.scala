@@ -166,24 +166,32 @@ class IngesterSpec extends SparkSpec {
 
     // The reference's standalone-step workflow: each stage reads its
     // predecessor's checkpoint, so they can run in separate sessions.
-    Ingester.extractStage(spark, in, stage)
+    // The place tagger feeds all three entity types through coref; a
+    // second Venezuela doc makes it an across-doc location, so the
+    // geolocation table has rows to compare.
+    Files.write(Paths.get(in, "d5.txt"),
+      "Maria Lopez flew from Bogota to Venezuela.".getBytes("UTF-8"))
+    Ingester.extractStage(spark, in, stage, tagger = IngesterSpec.PlaceTagger)
     Ingester.corefStage(spark, stage)
     Ingester.geocodeStage(spark, stage)
-    Ingester.exportStage(spark, stage, out, Ingester.Config(in, out))
+    Ingester.exportStage(spark, stage, out,
+      Ingester.Config(in, out, tagger = IngesterSpec.PlaceTagger))
 
-    // Stage outputs match the in-memory full run on the same corpus.
-    val full = Ingester.run(spark,
-      Ingester.Config(in, Files.createTempDirectory("graft-full-out").toString))
-    val stagedEntities = spark.read.parquet(s"$out/entity")
-    assert(stagedEntities.count() == full.entities.count())
-    val across = stagedEntities
+    // Stage outputs equal the full run's artifacts row for row (as
+    // multisets: exceptAll empty both ways) on the same corpus.
+    val fullOut = Files.createTempDirectory("graft-full-out").toString
+    Ingester.run(spark, Ingester.Config(in, fullOut, tagger = IngesterSpec.PlaceTagger))
+    for (table <- Seq("entity", "mention", "document_entity", "geolocation")) {
+      val staged = spark.read.parquet(s"$out/$table")
+      val full = spark.read.parquet(s"$fullOut/$table")
+      assert(staged.count() > 0, s"$table: empty artifact proves nothing")
+      assert(staged.exceptAll(full).isEmpty && full.exceptAll(staged).isEmpty,
+        s"$table: staged and full-run rows differ")
+    }
+    val across = spark.read.parquet(s"$out/entity")
       .filter(col("created_by") === "across_doc_person_coref")
       .select("text", "num_documents").as[(String, Long)].collect().toMap
     assert(across("JOHN SMITH") == 3L && across("ALICE JONES") == 3L)
-    assert(spark.read.parquet(s"$out/document_entity").count() ==
-      full.documentEntity.count())
-    assert(spark.read.parquet(s"$out/geolocation").count() ==
-      full.geolocation.count())
     assert(Files.exists(Paths.get(s"$out/social_network.graphml")))
   }
 
@@ -405,5 +413,15 @@ class IngesterSpec extends SparkSpec {
     assert(enrich(2L).getString(6) == "ve")
     assert(enrich(2L).getString(7) == "PCLI")
     assert(enrich(4L).getString(6) == "mx" && enrich(4L).getDouble(1) == 21.0)
+  }
+}
+
+object IngesterSpec {
+  /** CapitalizedRunTagger with the fixture's two place names as LOCATION. */
+  object PlaceTagger extends DocumentSource.NerTagger {
+    def tag(text: String): Seq[DocumentSource.TaggedMention] =
+      DocumentSource.CapitalizedRunTagger.tag(text).map { m =>
+        if (Set("Bogota", "Venezuela")(m.text)) m.copy(mentionType = "LOCATION") else m
+      }
   }
 }

@@ -42,4 +42,37 @@ class SortedSegmentsSpec extends SparkSpec {
       .as[(String, String)].collect().toMap
     assert(out.values.toSet == Set("a"), s"got ${out.values.toSet}")
   }
+
+  test("type guard: Levenshtein-1 texts across a type boundary never merge") {
+    // LOCATION texts b, bb, …, b×20 and PERSON texts b×21 … b×40: each type
+    // is one sort-adjacent chain, and the two chains meet at b×20 | b×21,
+    // which are Levenshtein-1 apart. Only the type check keeps them apart.
+    val texts = (1 to 40).map("b" * _)
+    val typed = texts.map(t => (if (t.length <= 20) "LOCATION" else "PERSON", t))
+      .toDF("type", "text")
+      .select(SortedSegments.typedKey(col("type"), col("text")).as("key"), col("text"))
+    val textOf = typed.as[(String, String)].collect().toMap
+    val guarded = SortedSegments.sameType(cond)
+    val boundaryHits = (2 to 8).count { n =>
+      val out = SortedSegments.assign(typed, guarded, numPartitions = n)
+        .as[(String, String)].collect()
+        .map { case (k, comp) => textOf(k) -> textOf(comp) }.toMap
+      texts.foreach { t =>
+        val want = if (t.length <= 20) "b" else "b" * 21
+        assert(out(t) == want, s"n=$n: ${t.length}×b labelled ${out(t).length}×b")
+      }
+      // Untyped, the same texts are one chain: the guard did the work.
+      assert(SortedSegments.assign(texts.toDF("key"), cond, numPartitions = n)
+        .select("comp").distinct().count() == 1)
+      // Did the type boundary fall on a partition boundary? Same range
+      // partitioning as assign: the two boundary keys land in different pids.
+      val pid = typed.select(col("key").cast("string").as("k"))
+        .repartitionByRange(n, col("k"))
+        .select(col("k"), spark_partition_id())
+        .as[(String, Int)].collect()
+        .map { case (k, p) => textOf(k) -> p }.toMap
+      pid("b" * 20) != pid("b" * 21)
+    }
+    assert(boundaryHits > 0, "no partition count put the type boundary on a partition edge")
+  }
 }
