@@ -8,21 +8,29 @@ import graft.sinks.{GraphML, RelationalExport, SearchIndex}
 import graft.sources.{DocumentSource, Gazetteer}
 
 /**
- * The full reference pipeline (/root/reference/src/Ingester.groovy:32-56,
- * ten steps) as a composition of pure DataFrame stages. Each stage is
- * independently callable (the reference's per-step mains — SURVEY.md §3.2);
- * `run` wires them end-to-end:
+ * The full reference pipeline (the reference's src/Ingester.groovy:32-56,
+ * ten steps), wired once: five stages over parquet checkpoints. Each stage
+ * reads its predecessor's checkpoint under a stage directory and writes
+ * its own, so any stage runs alone (the reference's per-step mains and
+ * `--coref-only` — SURVEY.md §3.2). `run` is the five stage calls with
+ * the output directory as the stage directory, so the checkpoints
+ * (documents, mention_raw, entity_raw, assignment, geolocation_raw) sit
+ * beside the artifacts (document, mention, entity, document_entity,
+ * geolocation, social_network.graphml, search_index*) and a finished run
+ * resumes from any stage:
  *
- *   1  EXTRACT_TEXT          scanDirectory + extractText
- *   2  FIND_NAMED_ENTITIES   extractMentions (pluggable tagger seam)
+ *   1  EXTRACT_TEXT          scanDirectory + extractText         extractStage
+ *   2  FIND_NAMED_ENTITIES   extractMentions (pluggable tagger)   extractStage
  *   3  POPULATE_GRAPH_DB     — plain DataFrames; no separate store
- *   4-6 PROCESS_*            one type-keyed coref pass for person/org/loc
- *                            (Coref.withinDocAll + acrossDocAll)
- *   7  GEOCODE               Geocode.run over the gazetteer
- *   8  PRECOMPUTE_COUNTS     SocialNetwork.documentEntityCounts
- *   9  INDEX_DOCS            — out-of-engine (Lucene); text predicates cover
- *  10  CONVERT_TO_H2         RelationalExport (parquet; jdbc mirror)
- *   +  social network        SocialNetwork.cooccurrenceEdges + GraphML
+ *   4-6 PROCESS_*            one type-keyed coref pass for        corefStage
+ *                            person/org/loc (Coref.withinDocAll
+ *                            + acrossDocAll)
+ *   7  GEOCODE               Geocode.run over the gazetteer       geocodeStage
+ *   8  PRECOMPUTE_COUNTS     SocialNetwork.documentEntityCounts   exportStage
+ *   9  INDEX_DOCS            SearchIndex term + positional build  indexStage
+ *  10  CONVERT_TO_H2         RelationalExport (parquet)           exportStage
+ *   +  social network        SocialNetwork.cooccurrenceEdges      exportStage
+ *                            + GraphML
  */
 object Ingester {
 
@@ -44,22 +52,7 @@ object Ingester {
       // sized array cell (SearchIndex.build nDocShards — the r12 OOM
       // fix). Search results are shard-agnostic; 32 keeps per-row state
       // ~= df/32 at any corpus size this pipeline meets.
-      indexDocShards: Int = 32,
-      // Also write the POSITIONAL index artifact (step 9b) so phrase /
-      // sloppy-phrase search serves from pipeline output without a
-      // bespoke build (VERDICT r12 #5). Same doc-shard bound — the
-      // positional artifact is strictly bigger per term, so the
-      // stop-word row bound matters here first.
-      indexPositional: Boolean = true)
-
-  final case class Result(
-      documents: DataFrame,
-      mentions: DataFrame,
-      entities: DataFrame,
-      assignment: DataFrame,
-      socialEdges: DataFrame,
-      documentEntity: DataFrame,
-      geolocation: DataFrame)
+      indexDocShards: Int = 32)
 
   /** Steps 4-6: one type-keyed coref pass over person/org/loc mentions;
     * returns (entities, mention→entity). */
@@ -73,57 +66,20 @@ object Ingester {
     (a.entities, finalAssign)
   }
 
-  def run(spark: SparkSession, cfg: Config): Result = {
-    // 1-2: files → text → mentions.
-    val raw = DocumentSource.scanDirectory(spark, cfg.inputDir, cfg.glob)
-    val docs = DocumentSource.extractText(raw, cfg.extractor)
-      .filter(col("text").isNotNull)
-    val mentions = DocumentSource.extractMentions(docs, cfg.tagger)
-
-    // 4-6: one coref pass over all three types (person/org/loc).
-    val (entities, assignment) = corefAll(mentions)
-
-    // 7: geocode locations against the gazetteer.
-    val geo = Geocode.run(entities, Gazetteer.countries(spark))
-
-    // 8: materialized counts; social network over coref'd persons.
-    val docEntity = SocialNetwork.documentEntityCounts(
-      assignment, mentions.select("mention_id", "doc_id"))
-    val edges = SocialNetwork.cooccurrenceEdges(
-      assignment, mentions.select("mention_id", "doc_id"), entities,
-      maxEntitiesPerDoc = cfg.maxEntitiesPerDoc)
-
-    // 10 (+GraphML): terminal artifacts.
-    val (keptNodes, keptEdges) = SocialNetwork.thresholded(
-      entities, edges, cfg.nodeMinDocs, cfg.edgeMinDocs)
-    RelationalExport.writeParquet(
-      RelationalExport.tables(
-        docs.select("doc_id", "name", "path", "text"),
-        mentions, assignment, entities, geo, docEntity),
-      cfg.outputDir)
-    GraphML.write(keptNodes, keptEdges, s"${cfg.outputDir}/social_network.graphml")
-    // 9: the search-index artifact (the reference's Lucene build step),
-    // doc-sharded so no term's postings collect into one row; 9b: the
-    // positional twin, serving phrase/sloppy search straight from the
-    // pipeline's output directory.
-    SearchIndex.write(
-      SearchIndex.build(docs, "doc_id", "text",
-        nDocShards = cfg.indexDocShards),
-      s"${cfg.outputDir}/search_index")
-    if (cfg.indexPositional)
-      SearchIndex.write(
-        SearchIndex.buildPositional(docs, "doc_id", "text",
-          nDocShards = cfg.indexDocShards),
-        s"${cfg.outputDir}/search_index_positional")
-
-    Result(docs, mentions, entities, assignment, edges, docEntity, geo)
+  /** All ten steps: the five stages with `cfg.outputDir` as the stage
+    * directory, which ends up holding the checkpoints and the artifacts. */
+  def run(spark: SparkSession, cfg: Config): Unit = {
+    val dir = cfg.outputDir
+    extractStage(spark, cfg.inputDir, dir, cfg.glob, cfg.extractor, cfg.tagger)
+    corefStage(spark, dir)
+    geocodeStage(spark, dir)
+    indexStage(spark, dir, cfg.indexDocShards)
+    exportStage(spark, dir, dir, cfg)
   }
 
-  // ---- Per-step stages over parquet checkpoints: every stage of the
-  // reference runs standalone (WithinDocPerCoref.groovy:20-30,
-  // Geocoder.groovy:60-92 `--coref-only` — SURVEY.md §3.2); here each
-  // stage reads its predecessor's checkpoint under <stageDir> and writes
-  // its own, so any stage can be re-run or resumed in isolation.
+  // ---- The stages, each standalone as in the reference
+  // (WithinDocPerCoref.groovy:20-30, Geocoder.groovy:60-92 `--coref-only`):
+  // read the predecessor's checkpoint under <stageDir>, write their own.
 
   /** Steps 1-2: corpus files → documents + mention_raw checkpoints. */
   def extractStage(spark: SparkSession, inputDir: String, stageDir: String,
@@ -147,20 +103,19 @@ object Ingester {
     assignment.write.mode("overwrite").parquet(s"$stageDir/assignment")
   }
 
-  /** Step 9 standalone: documents checkpoint → search_index artifact
-    * (doc-sharded — the same posting-row bound as the full run), plus
-    * the positional twin unless disabled. */
-  def indexStage(spark: SparkSession, stageDir: String,
-      nDocShards: Int = 32, positional: Boolean = true): Unit = {
+  /** Step 9: documents checkpoint → search_index artifact plus its
+    * positional twin, which serves phrase/sloppy-phrase search (VERDICT
+    * r12 #5). Both are doc-sharded so no term's postings collect into one
+    * row; the positional artifact is bigger per term, so the bound
+    * matters for it first. */
+  def indexStage(spark: SparkSession, stageDir: String, nDocShards: Int = 32): Unit = {
     val docs = spark.read.parquet(s"$stageDir/documents")
     SearchIndex.write(
       SearchIndex.build(docs, "doc_id", "text", nDocShards = nDocShards),
       s"$stageDir/search_index")
-    if (positional)
-      SearchIndex.write(
-        SearchIndex.buildPositional(docs, "doc_id", "text",
-          nDocShards = nDocShards),
-        s"$stageDir/search_index_positional")
+    SearchIndex.write(
+      SearchIndex.buildPositional(docs, "doc_id", "text", nDocShards = nDocShards),
+      s"$stageDir/search_index_positional")
   }
 
   /** Step 7: entity_raw checkpoint → geolocation_raw. */

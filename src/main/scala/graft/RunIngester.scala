@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions.{col, count, lit, sum}
 
 /**
  * Standalone pipeline CLI (the reference's Ingester.main shape —
- * /root/reference/src/Ingester.groovy:60-97 — plus its per-step mains,
- * SURVEY.md §3.2):
+ * its src/Ingester.groovy:60-97 — plus its per-step mains, SURVEY.md §3.2):
  *
  *   sbt "runMain graft.RunIngester <inputDir> <outputDir> [glob]"   full run
  *   sbt "runMain graft.RunIngester run     <inputDir> <outputDir> [glob]"
@@ -22,11 +21,13 @@ import org.apache.spark.sql.functions.{col, count, lit, sum}
  * the explicit `run` subcommand or an explicit path prefix (`./extract`) —
  * without one of those, bare `extract`/`coref`/… is always the stage.
  *
- * The full run produces the relational parquet export (document/mention/
- * entity/document_entity/geolocation) plus social_network.graphml under
- * <outputDir>; the stage commands checkpoint each step as parquet under
- * <stageDir> so any step can be re-run alone (the reference's
- * `--coref-only` workflow).
+ * The full run is the stage commands over <outputDir>: it leaves the
+ * relational parquet export (document/mention/entity/document_entity/
+ * geolocation), social_network.graphml and search_index* there, beside the
+ * stage checkpoints, and prints each table's row count read back from the
+ * written parquet. Any stage re-runs alone over those checkpoints (the
+ * reference's `--coref-only` workflow): `coref <out>` then
+ * `export <out> <out>` re-runs coref in place.
  */
 object RunIngester {
   def main(args: Array[String]): Unit = {
@@ -95,21 +96,14 @@ object RunIngester {
         println(s"tokenize: ${persisted.count()} merges; " +
           s"${stats.getLong(0)} docs, ${stats.getLong(1)} symbols " +
           s"under ${args(2)}")
-      case "run" =>
-        // Explicit full-run form: unambiguous even when the corpus dir is
-        // literally named "extract"/"coref"/… (ADVICE r2).
-        require(args.length >= 3, "usage: RunIngester run <inputDir> <outputDir> [glob]")
-        val glob = if (args.length > 3) args(3) else "*.txt"
-        val r = Ingester.run(spark, Ingester.Config(args(1), args(2), glob))
-        println(s"documents=${r.documents.count()} mentions=${r.mentions.count()} " +
-          s"entities=${r.entities.count()} social_edges=${r.socialEdges.count()} " +
-          s"geolocations=${r.geolocation.count()}")
-      case inputDir =>
-        val glob = if (args.length > 2) args(2) else "*.txt"
-        val r = Ingester.run(spark, Ingester.Config(inputDir, args(1), glob))
-        println(s"documents=${r.documents.count()} mentions=${r.mentions.count()} " +
-          s"entities=${r.entities.count()} social_edges=${r.socialEdges.count()} " +
-          s"geolocations=${r.geolocation.count()}")
+      case cmd =>
+        // The explicit `run` form is unambiguous even when the corpus dir
+        // is literally named "extract"/"coref"/… (ADVICE r2).
+        val a = if (cmd == "run") args.tail else args
+        require(a.length >= 2, "usage: RunIngester [run] <inputDir> <outputDir> [glob]")
+        Ingester.run(spark, Ingester.Config(a(0), a(1), a.lift(2).getOrElse("*.txt")))
+        println(Seq("document", "mention", "entity", "document_entity", "geolocation")
+          .map(t => s"$t=${spark.read.parquet(s"${a(1)}/$t").count()}").mkString(" "))
     }
     spark.stop()
   }

@@ -18,19 +18,19 @@ class GoldenSpec extends SparkSpec {
 
   test("fixture corpus produces the committed golden tables") {
     val out = Files.createTempDirectory("golden-check").toString
-    val r = Ingester.run(spark,
-      Ingester.Config("src/test/resources/corpus", out))
+    Ingester.run(spark, Ingester.Config("src/test/resources/corpus", out))
+    val entity = spark.read.parquet(s"$out/entity")
 
-    val ent = r.entities
-      .select("entity_type", "entity_text", "created_by", "num_mentions", "num_docs")
+    val ent = entity
+      .select("type", "text", "created_by", "num_mentions", "num_documents")
       .collect().map(_.toSeq.mkString("|")).sorted.mkString("\n") + "\n"
     assert(ent == resource("golden_entities.txt"))
 
-    val de = r.documentEntity.select(col("doc_id"), col("entity_id"),
-        col("num_mentions").as("de_mentions"))
-      .join(r.entities.select(col("entity_id"), col("entity_text")), "entity_id")
-      .join(r.documents.select(col("doc_id"), col("name")), "doc_id")
-      .select("name", "entity_text", "de_mentions")
+    val de = spark.read.parquet(s"$out/document_entity")
+      .select(col("document_id"), col("entity_id"), col("num_mentions").as("de_mentions"))
+      .join(entity.select(col("entity_id"), col("text")), "entity_id")
+      .join(spark.read.parquet(s"$out/document").select("document_id", "name"), "document_id")
+      .select("name", "text", "de_mentions")
       .collect().map(_.toSeq.mkString("|")).sorted.mkString("\n") + "\n"
     assert(de == resource("golden_document_entity.txt"))
   }

@@ -1,8 +1,19 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.sources.{DocumentSource, XmlCorpusSource}
 
@@ -27,49 +38,100 @@ class IngesterSpec extends SparkSpec {
     root.toString
   }
 
-  test("Ingester.run: corpus → entities, social network, exports") {
+  /** Runs `body` with a job listener and a plan listener attached and
+    * returns (jobs, `binaryFile` scan nodes) over every plan it executed,
+    * walking adaptive query stages, reused exchanges and cached relations. */
+  private def countCorpusScans(body: => Unit): (Long, Long) = {
+    val sc = spark.sparkContext
+    val jobs, scans = new AtomicLong
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        def walk(p: SparkPlan): Long = p match {
+          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+          case s: QueryStageExec => walk(s.plan)
+          case r: ReusedExchangeExec => walk(r.child)
+          case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+          case f: FileSourceScanExec =>
+            if (f.relation.fileFormat.isInstanceOf[BinaryFileFormat]) 1L else 0L
+          case other => (other.children ++ other.subqueries).map(walk).sum
+        }
+        scans.addAndGet(walk(qe.executedPlan))
+      }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBridge.waitUntilListenerBusEmpty(sc, 60000L)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      body
+      ListenerBridge.waitUntilListenerBusEmpty(sc, 60000L)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    (jobs.get, scans.get)
+  }
+
+  /** One `Ingester.run` over the fixture corpus, shared by the tests that
+    * read its output directory: (outputDir, jobs, binaryFile scan nodes). */
+  private lazy val fixtureRun: (String, Long, Long) = {
     val in = writeFixtureCorpus()
     val out = Files.createTempDirectory("graft-out").toString
-    val r = Ingester.run(spark, Ingester.Config(in, out))
+    val (jobs, scans) = countCorpusScans(Ingester.run(spark, Ingester.Config(in, out)))
+    (out, jobs, scans)
+  }
 
-    assert(r.documents.count() == 4)
+  test("Ingester.run: corpus → entities, social network, exports") {
+    val (out, _, _) = fixtureRun
+
+    assert(spark.read.parquet(s"$out/document").count() == 4)
 
     // The three John Smith variants (incl. OCR near-dup Smitb) coref to one
     // across-doc entity over 3 docs; Alice Jones over 3 docs.
-    val across = r.entities
+    val entity = spark.read.parquet(s"$out/entity")
+    val across = entity
       .filter(col("created_by") === "across_doc_person_coref")
-      .select("entity_text", "num_docs")
+      .select("text", "num_documents")
       .as[(String, Long)].collect().toMap
     assert(across("JOHN SMITH") == 3L)
     assert(across("ALICE JONES") == 3L)
 
-    // Social edge JOHN SMITH — ALICE JONES with num_docs = 3.
-    val edgeCount = r.socialEdges.as[(Long, Long, Long)].collect()
-    val ids = r.entities.filter(col("entity_text").isin("JOHN SMITH", "ALICE JONES"))
+    // Social edge JOHN SMITH — ALICE JONES with num_docs = 3, as exported.
+    val gml = new String(Files.readAllBytes(Paths.get(s"$out/social_network.graphml")), "UTF-8")
+    val nodeIds = entity.filter(col("text").isin("JOHN SMITH", "ALICE JONES"))
       .filter(col("created_by").startsWith("across"))
-      .select("entity_id").as[Long].collect().toSet
-    val theEdge = edgeCount.filter(e => ids.contains(e._1) && ids.contains(e._2))
-    assert(theEdge.length == 1 && theEdge.head._3 == 3L)
+      .select("entity_id").as[Long].collect().map(id => s"n$id").toSet
+    val theEdge = """<edge id="e\d+" source="(n\d+)" target="(n\d+)"><data key="num_docs">(\d+)<""".r
+      .findAllMatchIn(gml)
+      .filter(m => nodeIds(m.group(1)) && nodeIds(m.group(2)))
+      .map(_.group(3).toLong).toSeq
+    assert(nodeIds.size == 2 && theEdge == Seq(3L))
 
     // Exports exist and reload.
     val mention = spark.read.parquet(s"$out/mention")
     assert(mention.count() > 0)
     // Unresolved mentions keep NULL entity_id (left-outer semantics, R21).
     assert(mention.filter(col("entity_id").isNull).count() >= 0)
-    val entity = spark.read.parquet(s"$out/entity")
     assert(entity.filter(col("type") === "PERSON").count() > 0)
-    assert(Files.exists(Paths.get(s"$out/social_network.graphml")))
-    val gml = new String(Files.readAllBytes(Paths.get(s"$out/social_network.graphml")), "UTF-8")
     assert(gml.contains("<node id=") && gml.contains("<edge id="))
     assert(gml.contains("JOHN SMITH"))
   }
 
+  test("Ingester.run scans the corpus exactly once per extract-stage write") {
+    // The documents and mention_raw checkpoints each scan the corpus once;
+    // every later stage reads checkpoints, never the corpus.
+    val (_, jobs, scans) = fixtureRun
+    info(s"Ingester.run on the fixture corpus: $jobs jobs, $scans binaryFile scan nodes")
+    assert(scans == 2L, s"expected 2 binaryFile scan nodes, executed $scans")
+  }
+
   test("pipeline positional artifact serves phrase search == a direct build (VERDICT r12 #5)") {
-    val in = writeFixtureCorpus()
-    val out = Files.createTempDirectory("graft-out-pos").toString
-    val r = Ingester.run(spark, Ingester.Config(in, out))
+    val (out, _, _) = fixtureRun
     assert(Files.exists(Paths.get(s"$out/search_index_positional")),
-      "step 9b must write the positional artifact by default")
+      "step 9b must write the positional artifact")
     val fromPipeline = graft.sinks.SearchIndex.searchPhraseSloppy(
         spark, s"$out/search_index_positional", Seq("John", "Smith"),
         slop = 0)
@@ -77,7 +139,7 @@ class IngesterSpec extends SparkSpec {
     val direct = Files.createTempDirectory("graft-pos-direct").toString
     graft.sinks.SearchIndex.write(
       graft.sinks.SearchIndex.buildPositional(
-        r.documents, "doc_id", "text", nDocShards = 32),
+        spark.read.parquet(s"$out/documents"), "doc_id", "text", nDocShards = 32),
       direct)
     val fromDirect = graft.sinks.SearchIndex.searchPhraseSloppy(
         spark, direct, Seq("John", "Smith"), slop = 0)
@@ -85,12 +147,6 @@ class IngesterSpec extends SparkSpec {
     assert(fromPipeline === fromDirect && fromPipeline.nonEmpty)
     // the fixture really phrase-matches: d1 twice, d2 once
     assert(fromPipeline.values.sum == 3L)
-    // opting out suppresses only the positional twin
-    val out2 = Files.createTempDirectory("graft-out-nopos").toString
-    Ingester.run(spark,
-      Ingester.Config(in, out2, indexPositional = false))
-    assert(Files.exists(Paths.get(s"$out2/search_index")))
-    assert(!Files.exists(Paths.get(s"$out2/search_index_positional")))
   }
 
   test("GraphML export guard trips before streaming an oversized network") {
@@ -161,38 +217,40 @@ class IngesterSpec extends SparkSpec {
 
   test("per-step stages over parquet checkpoints reproduce the full run") {
     val in = writeFixtureCorpus()
-    val stage = Files.createTempDirectory("graft-stage").toString
-    val out = Files.createTempDirectory("graft-stage-out").toString
+    val out = Files.createTempDirectory("graft-run-out").toString
+    val resumed = Files.createTempDirectory("graft-resumed-out").toString
 
-    // The reference's standalone-step workflow: each stage reads its
-    // predecessor's checkpoint, so they can run in separate sessions.
     // The place tagger feeds all three entity types through coref; a
     // second Venezuela doc makes it an across-doc location, so the
     // geolocation table has rows to compare.
     Files.write(Paths.get(in, "d5.txt"),
       "Maria Lopez flew from Bogota to Venezuela.".getBytes("UTF-8"))
-    Ingester.extractStage(spark, in, stage, tagger = IngesterSpec.PlaceTagger)
-    Ingester.corefStage(spark, stage)
-    Ingester.geocodeStage(spark, stage)
-    Ingester.exportStage(spark, stage, out,
-      Ingester.Config(in, out, tagger = IngesterSpec.PlaceTagger))
+    Ingester.run(spark, Ingester.Config(in, out, tagger = IngesterSpec.PlaceTagger))
 
-    // Stage outputs equal the full run's artifacts row for row (as
-    // multisets: exceptAll empty both ways) on the same corpus.
-    val fullOut = Files.createTempDirectory("graft-full-out").toString
-    Ingester.run(spark, Ingester.Config(in, fullOut, tagger = IngesterSpec.PlaceTagger))
+    // The reference's `--coref-only` workflow: a finished run's output
+    // directory holds the stage checkpoints, so the later stages re-run
+    // over it, here exporting into a fresh directory.
+    Ingester.corefStage(spark, out)
+    Ingester.geocodeStage(spark, out)
+    Ingester.exportStage(spark, out, resumed,
+      Ingester.Config(in, resumed, tagger = IngesterSpec.PlaceTagger))
+
+    // The resumed artifacts equal the run's row for row (as multisets:
+    // exceptAll empty both ways).
     for (table <- Seq("entity", "mention", "document_entity", "geolocation")) {
-      val staged = spark.read.parquet(s"$out/$table")
-      val full = spark.read.parquet(s"$fullOut/$table")
-      assert(staged.count() > 0, s"$table: empty artifact proves nothing")
-      assert(staged.exceptAll(full).isEmpty && full.exceptAll(staged).isEmpty,
-        s"$table: staged and full-run rows differ")
+      val again = spark.read.parquet(s"$resumed/$table")
+      val first = spark.read.parquet(s"$out/$table")
+      assert(again.count() > 0 && first.count() > 0, s"$table: empty artifact proves nothing")
+      assert(again.exceptAll(first).isEmpty && first.exceptAll(again).isEmpty,
+        s"$table: resumed and full-run rows differ")
     }
-    val across = spark.read.parquet(s"$out/entity")
+    def graphml(dir: String): Seq[String] =
+      Files.readAllLines(Paths.get(s"$dir/social_network.graphml")).asScala.toSeq
+    assert(graphml(resumed) == graphml(out))
+    val across = spark.read.parquet(s"$resumed/entity")
       .filter(col("created_by") === "across_doc_person_coref")
       .select("text", "num_documents").as[(String, Long)].collect().toMap
     assert(across("JOHN SMITH") == 3L && across("ALICE JONES") == 3L)
-    assert(Files.exists(Paths.get(s"$out/social_network.graphml")))
   }
 
   test("search-index artifact: bucket-pruned lookup serves conjunctive search") {
