@@ -67,28 +67,14 @@ private object Q75Bench {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional query-name regex (local iteration); driver passes no args.
     val nameFilter = args.headOption.map(_.r)
-    // Harness pinning mode — see CacheScope.pin: truncates operator-
-    // internal pins to LogicalRDD leaves so timings measure task work,
-    // not Spark 4's nested-AQE plan-string rendering on the driver.
-    // SPARK_GRAFT_PIN=persist opts back into the library default (A/B
-    // measurement aid).
-    if (sys.env.getOrElse("SPARK_GRAFT_PIN", "checkpoint") == "checkpoint")
-      System.setProperty("graft.pin.checkpoint", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Cap AQE plan-update string generation (driver-side, exponential in
-      // cache-nesting depth) — see PipelineQueries.corefPipeline scaladoc.
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Harness pinning mode, always on here as in Verify — see
+    // CacheScope.pin: truncates operator-internal pins to LogicalRDD
+    // leaves so timings measure task work, not Spark 4's nested-AQE
+    // plan-string rendering on the driver.
+    System.setProperty("graft.pin.checkpoint", "true")
+    val spark = Sessions.local(Sessions.envCores)
     // Per-query shuffle-bytes telemetry: wall time on a shared host swings
     // 2-5x under co-tenant load, but a plan's shuffle volume doesn't — the
     // bytes column is the regression signal noise can't fake. The bus is

@@ -39,7 +39,7 @@ object Ingester {
       outputDir: String,
       glob: String = "*.txt",
       extractor: DocumentSource.TextExtractor = DocumentSource.Utf8Extractor,
-      tagger: DocumentSource.NerTagger = DocumentSource.CapitalizedRunTagger,
+      tagger: DocumentSource.NerTagger = DocumentSource.GazetteerTagger,
       nodeMinDocs: Int = 2,
       edgeMinDocs: Int = 2,
       // O(p²) pair-generation guard: keep each doc's top-N entities by
@@ -85,7 +85,7 @@ object Ingester {
   def extractStage(spark: SparkSession, inputDir: String, stageDir: String,
       glob: String = "*.txt",
       extractor: DocumentSource.TextExtractor = DocumentSource.Utf8Extractor,
-      tagger: DocumentSource.NerTagger = DocumentSource.CapitalizedRunTagger): Unit = {
+      tagger: DocumentSource.NerTagger = DocumentSource.GazetteerTagger): Unit = {
     val raw = DocumentSource.scanDirectory(spark, inputDir, glob)
     val docs = DocumentSource.extractText(raw, extractor)
       .filter(col("text").isNotNull)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 
 /**
@@ -15,6 +14,7 @@ import org.apache.spark.sql.functions.{col, count, lit, sum}
  *   sbt "runMain graft.RunIngester index   <stageDir>"
  *   sbt "runMain graft.RunIngester export  <stageDir> <outDir>"
  *   sbt "runMain graft.RunIngester curate  <docsParquet> <outDir> [benchParquet]"
+ *   sbt "runMain graft.RunIngester tokenize <docsParquet> <outDir> [merges]"
  *
  * Stage names win the args(0) dispatch (the conventional subcommand rule).
  * A corpus input directory literally named like a stage command is run via
@@ -28,6 +28,10 @@ import org.apache.spark.sql.functions.{col, count, lit, sum}
  * written parquet. Any stage re-runs alone over those checkpoints (the
  * reference's `--coref-only` workflow): `coref <out>` then
  * `export <out> <out>` re-runs coref in place.
+ *
+ * The tagger is [[graft.sources.DocumentSource.GazetteerTagger]], so
+ * gazetteer place names become LOCATION entities and reach the geocoder.
+ * The session comes from [[Sessions.local]] on `SPARK_GRAFT_CPUS` cores.
  */
 object RunIngester {
   def main(args: Array[String]): Unit = {
@@ -36,17 +40,7 @@ object RunIngester {
         "extract <in> <stage> [glob] | coref <stage> | geocode <stage> | " +
         "index <stage> | export <stage> <out> | curate <docs> <out> [bench] | " +
         "tokenize <docs> <out> [merges]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .appName("graft-ingester")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCores)
     args(0) match {
       case "extract" =>
         val glob = if (args.length > 3) args(3) else "*.txt"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,22 +10,9 @@ object Verify {
     val nameFilter = args.lift(2).map(_.r)
     def keep(name: String): Boolean =
       nameFilter.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Harness pinning mode — see CacheScope.pin (same rationale as Bench).
     System.setProperty("graft.pin.checkpoint", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Deep-lineage frames over nested cached adaptive plans cost seconds
-      // of driver time PER ACTION just generating AQE plan-update strings
-      // (exponential in cache-nesting depth). The strings only feed
-      // UI/debug events — cap them. See PipelineQueries.corefPipeline.
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCores)
     new java.io.File(outDir).mkdirs()
     // Every query that throws is recorded in errors.json (written even when
     // empty) and its partial output dir is removed, so the correctness

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
  * only the dst side wedges. The vertex-priority orientation of the
  * literature is the same degree-cap idea expressed per node. At
  * 100 TB, bucket the edge list by the right key once; the self-join
- * reuses the layout. ScaleSmoke's butterflies_hub rows measure the
- * blow-up and the cap's effect on a planted hub supplier.
+ * reuses the layout. docs/SCALE.md's planted-hub record measures the
+ * blow-up and the cap's effect on a hub supplier.
  *
  * @param edges bipartite edge list (`src` = left, `dst` = right, any
  *              castable type; duplicates deduped so multi-edges don't

@@ -57,9 +57,10 @@ object CacheScope {
   private val active = new ThreadLocal[Scope]
 
   /**
-   * Harness pinning mode (`-Dgraft.pin.checkpoint=true`, set by Bench and
-   * Verify): pin() eagerly localCheckpoints instead of persisting. On
-   * Spark 4, every action over a plan nesting cached adaptive subplans
+   * Harness pinning mode (`-Dgraft.pin.checkpoint=true`, always set by the
+   * Bench and Verify mains and by nothing else): pin() eagerly
+   * localCheckpoints instead of persisting. On Spark 4, every action
+   * over a plan nesting cached adaptive subplans
    * pays DRIVER time generating AQE plan-update strings (exponential in
    * nesting depth — the q41 root cause, see PipelineQueries.corefPipeline);
    * checkpointing truncates each pinned frame to a LogicalRDD leaf, which

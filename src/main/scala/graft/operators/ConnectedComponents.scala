@@ -40,8 +40,8 @@ object ConnectedComponents {
     runWithRounds(edges, maxIter, strict)._1
 
   /** [[run]] plus the number of propagation rounds executed — the
-    * convergence diagnostic ScaleSmoke's cc_rounds row measures against
-    * [[runAlternating]] (min-label needs O(diameter) rounds; the
+    * convergence diagnostic docs/SCALE.md's cc_rounds record measures
+    * against [[runAlternating]] (min-label needs O(diameter) rounds; the
     * alternation needs O(log n)). */
   private[graft] def runWithRounds(edges: DataFrame, maxIter: Int = 25,
       strict: Boolean = false): (DataFrame, Int) = {
@@ -145,7 +145,7 @@ object ConnectedComponents {
    * (templated near-dup runs, sessionized event paths) would need 10⁶
    * shuffle rounds. The alternation contracts path length roughly
    * geometrically, so the SAME chain converges in tens of rounds
-   * (ScaleSmoke's cc_rounds row measures both on path graphs). Labels
+   * (docs/SCALE.md's cc_rounds record measures both on path graphs). Labels
    * are identical to [[run]]'s — component id = min member key — so
    * the two are interchangeable on output (spec-pinned equal).
    *

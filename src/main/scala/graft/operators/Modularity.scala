@@ -577,8 +577,8 @@ object Modularity {
    * point; SCALE.md's louvain_levels row measures nodes-per-level
    * shrink at flat wall). Each level's frames are checkpointed so the
    * plan tree stays level-local instead of doubling per level (the
-   * ScaleSmoke deep-walk lesson), and every intermediate checkpoint
-   * releases before return — including [[greedyMoveRound]]'s and
+   * deep-walk lesson recorded in docs/SCALE.md), and every intermediate
+   * checkpoint releases before return — including [[greedyMoveRound]]'s and
    * [[coarsen]]'s internal ones, which release via a per-call
    * tracking scope, so no ambient [[CacheScope.tracking]] is required
    * around louvain itself (ADVICE r14).

@@ -43,7 +43,9 @@ object ScaleOps {
     salted.join(replicated, Seq(key, "_salt")).drop("_salt")
   }
 
-  /** True if the executed plan of `df` contains a shuffle exchange. */
+  /** True if the executed plan of `df` contains a shuffle exchange. Reads
+    * the plan string, so render it under a session whose
+    * `spark.sql.maxPlanStringLength` cap cannot cut the plan short. */
   def hasShuffle(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 

@@ -439,7 +439,7 @@ object Similarity {
    * collects anywhere, and the plan scales to queries ≈ corpus
    * ([[semanticDedupQuantized]] routes through it; AnnSpec pins
    * shuffle == broadcast results under a disabled auto-broadcast
-   * threshold; ScaleSmoke's sq8_serve_fanout row measures the
+   * threshold; docs/SCALE.md's sq8_serve_fanout record measures the
    * corpus-sized-query regime).
    */
   def ivfTopKQuantizedServe(artifact: DataFrame, centroids: DataFrame,
@@ -1013,8 +1013,9 @@ object Similarity {
    * set in ~log_degree(nLists) hops (the Kleinberg/HNSW diameter
    * argument buildNavGraph's long links exist to guarantee), so depth
    * = ceil(log_degree(nLists)) + 2 — the crossing plus two refinement
-   * rounds (the round-15 BeamProbe ladder measured +1 insufficient at
-   * 512 cells: depth 5 → 7 recovered +0.15 agreement at fixed width).
+   * rounds (the round-15 beam ladder in docs/SCALE.md measured +1
+   * insufficient at 512 cells: depth 5 → 7 recovered +0.15 agreement at
+   * fixed width).
    * Grows with the artifact: a fixed depth that was ample at
    * 10³ cells silently decays at 10⁵ (SCALE.md pq_beam_serve measured
    * exactly that), while this default cannot be outgrown.
@@ -1030,7 +1031,7 @@ object Similarity {
    * consumes the whole frontier (≥ 2·nProbe) and scaling with the
    * space's diameter like HNSW's ef parameter (4·log₂(nLists) —
    * Malkov & Yashunin 2018 keep ef ∝ ln N with a generous constant;
-   * the ScaleSmoke pq_beam_auto sweep picked 4 over 2: at 256 cells
+   * docs/SCALE.md's pq_beam_auto sweep picked 4 over 2: at 256 cells
    * the 2× width still shed a quarter of the dense probe's answer),
    * floored at 8. At the 16-cell oracle fixtures this stays a small
    * frontier (16); at 10⁶ cells it widens to ~80 — per-query work
@@ -1043,8 +1044,8 @@ object Similarity {
 
   /**
    * Auto-size the navigation graph's OUT-DEGREE from the cell count:
-   * max(4, ceil(log₂(nLists))). The round-15 BeamProbe ladder showed
-   * construction degree is the DOMINANT agreement lever at growing
+   * max(4, ceil(log₂(nLists))). The round-15 beam ladder (docs/SCALE.md)
+   * showed construction degree is the DOMINANT agreement lever at growing
    * cell counts (512 cells: degree 8 vs 4 was 0.842 vs 0.569 at the
    * same walk budget) — a fixed degree is the same silently-decaying
    * default the walk budget was, so the builder scales it with the
@@ -1058,7 +1059,7 @@ object Similarity {
   /**
    * Auto-size the walk's ENTRY set: max(2, ceil(log₂(nLists) / 2)).
    * More entry points diversify where the walk starts — the flat-graph
-   * stand-in for HNSW's upper layers — and the BeamProbe ladder showed
+   * stand-in for HNSW's upper layers — and the same ladder showed
    * it recovers agreement a deeper walk alone cannot (512 cells, fixed
    * degree 4: entry 8 vs 2 was 0.802 vs 0.569 at the same budget).
    * Driver cost is entryCells collected vectors, still logarithmic.
@@ -1121,7 +1122,7 @@ object Similarity {
       fixedCentroids: Option[Array[Array[Double]]] = None): DataFrame = {
     // ≤ 0 auto-sizes from nLists — already a parameter here, so no
     // metadata job is needed (VERDICT r14 #3: defaults must not decay
-    // as the cell count grows; the round-15 BeamProbe extension scales
+    // as the cell count grows; the round-15 beam-ladder extension scales
     // the GRAPH degree and the entry set too). The final beam IS the
     // probe set on this face, so the width formula's nProbe term
     // drops out.
@@ -1272,7 +1273,7 @@ object Similarity {
    * 160-cell graph) can't reach most vectors' true cells, and the
    * misassignments CONCENTRATE near the entry region, so the candidate
    * equi-join on `cell` inherits a hot-cell skew on top of the recall
-   * loss (measured in ScaleSmoke's mutual_nn_beam rows; [[cellStats]]
+   * loss (recorded in docs/SCALE.md's mutual_nn_beam rows; [[cellStats]]
    * over the beam assignment is the pre-flight diagnostic). The flop
    * win over the dense path only materializes once nLists far exceeds
    * the walk's touch count (≈ entryCells + depth·beamWidth·(degree+1)),
@@ -1430,7 +1431,7 @@ object Similarity {
     // degree <= 0 auto-sizes from the cell count (one metadata-sized
     // job, offline-build context) — [[autoNavDegree]]: a fixed degree
     // is the same silently-decaying default the walk budget was
-    // (VERDICT r14 #3 extended by the round-15 BeamProbe finding).
+    // (VERDICT r14 #3 extended by the round-15 beam-ladder finding).
     val deg = if (degree > 0) degree else autoNavDegree(c.count())
     require(deg >= 1, s"degree >= 1: $deg")
     val ladder = (1 to longLinks).map(l => deg.toLong * (1L << l))
@@ -1600,7 +1601,7 @@ object Similarity {
     require(centroids.nonEmpty, "centroids must be non-empty")
     // ≤ 0 (default) auto-sizes from the centroid count — both inputs
     // are already in hand, no job needed (VERDICT r14 #3 + the
-    // round-15 BeamProbe degree/entry extension).
+    // round-15 beam-ladder degree/entry extension).
     val n = centroids.length.toLong
     val deg = if (degree > 0) degree else autoNavDegree(n)
     val ec = if (entryCells > 0) entryCells
@@ -1848,20 +1849,6 @@ object Similarity {
     corpus
       .select((array_position(d2s, array_min(d2s)) - 1).cast("int").as("cell"))
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-  }
-
-  /** Dense argmin cell assignment per vector — (id, cell), the exact
-    * counterpart of [[beamAssign]]: O(nLists) d2 evaluations per vector
-    * (the term the beam walk exists to remove), so the cheaper AND
-    * exact choice below ~10³ cells. Same argmin convention as
-    * [[cellCounts]] (first-min ties to the smaller cell id). */
-  def denseAssign(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): DataFrame = {
-    require(centroids.nonEmpty, "centroids must be non-empty")
-    val d2s = array(centroids.map(c =>
-      sqL2(col(vecCol), array(c.map(lit): _*))): _*)
-    df.select(col(idCol).as("id"),
-      (array_position(d2s, array_min(d2s)) - 1).cast("int").as("cell"))
   }
 
   /** The report half of [[cellStats]]: complete a (cell, n) count table

@@ -1835,7 +1835,7 @@ object PipelineQueries {
     // (hundreds at sf0.01, thousands at sf0.1), so min-label would
     // need that many shuffle rounds while the alternation contracts
     // the chain geometrically (strict = true — the fixpoint is
-    // VERIFIED, not assumed; rounds measured in ScaleSmoke cc_rounds).
+    // VERIFIED, not assumed; rounds recorded in docs/SCALE.md cc_rounds).
     // The oracle never runs a traversal: chaining consecutive members
     // makes each group exactly one component, so component id = the
     // group's min orderkey — an analytic window, which is what makes a

@@ -5,6 +5,9 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.StripAccentsUtil
 
 /**
  * Document ingestion sources:
@@ -22,7 +25,8 @@ import org.apache.spark.sql.types._
  *    tagger applied via mapPartitions (model loaded once per partition),
  *    emitting the reference's exact CSV shape
  *    (type, start, stop, index, global_id, text). The Stanford CRF seam is
- *    STUBBED with a deterministic capitalized-run tagger.
+ *    STUBBED with a deterministic capitalized-run tagger that types
+ *    gazetteer place names as LOCATION (the default, [[GazetteerTagger]]).
  *  - mention CSV source/sink (R4 — EntityExtractor.groovy:30,
  *    Ingester.groovy:244-251).
  */
@@ -112,6 +116,26 @@ object DocumentSource {
   }
 
   /**
+   * The default tagger: [[CapitalizedRunTagger]], except that a run whose
+   * accent-stripped, upper-cased text is a [[Gazetteer.SampleCountries]]
+   * name becomes LOCATION. The reference's 3-class Stanford CRF tags
+   * places as LOCATION (EntityExtractor.groovy:19-34), and the location
+   * coref pass and the geocoder read only LOCATION mentions, so without
+   * this rule a run never geocodes.
+   */
+  object GazetteerTagger extends NerTagger {
+    private val Places: Set[String] = Gazetteer.SampleCountries.map(_.name_upper).toSet
+
+    private def key(text: String): String =
+      StripAccentsUtil.strip(UTF8String.fromString(text)).toString.toUpperCase
+
+    def tag(text: String): Seq[TaggedMention] =
+      CapitalizedRunTagger.tag(text).map { m =>
+        if (Places.contains(key(m.text))) m.copy(mentionType = "LOCATION") else m
+      }
+  }
+
+  /**
    * STUB seam for the Stanford CRF tagger (EntityExtractor.groovy:13,23:
    * `CRFClassifier.getClassifier(model)` once, then
    * `classifyToCharacterOffsets` per doc). The lazy val IS the
@@ -120,7 +144,7 @@ object DocumentSource {
   final class CrfNerTagger(modelPath: String) extends NerTagger {
     @transient private lazy val model: AnyRef =
       throw new UnsupportedOperationException(
-        s"CRF model $modelPath not available; use CapitalizedRunTagger")
+        s"CRF model $modelPath not available; use GazetteerTagger")
     def tag(text: String): Seq[TaggedMention] = { model; Nil }
   }
 
@@ -129,7 +153,7 @@ object DocumentSource {
    * ids. NBSP fixup applied to types as in EntityExtractor.groovy:24-25.
    * flatMap shape: 1 doc → n mentions (a Generator in Catalyst terms).
    */
-  def extractMentions(docs: DataFrame, tagger: NerTagger = CapitalizedRunTagger): DataFrame = {
+  def extractMentions(docs: DataFrame, tagger: NerTagger = GazetteerTagger): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val tagged = docs.select(col("doc_id"), col("text")).as[(Long, String)]

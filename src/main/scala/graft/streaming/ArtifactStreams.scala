@@ -429,7 +429,7 @@ object ArtifactStreams {
           lastFolded = batchId
         }
         // Non-retention: hand the sink the checkpointed frame ITSELF —
-        // callers (ScaleSmoke) release it via unpinCheckpoint, which
+        // a caller that keeps it releases it via unpinCheckpoint, which
         // no-ops on anything but a bare LogicalRDD. Retention: project
         // the label columns (the carried table also holds last_ts).
         sink(if (retention.isEmpty) state.get

@@ -19,11 +19,21 @@ class BatteryPlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** What Spark appends to a plan string it cut at the length cap. */
+  private val truncationMarker = "\\.\\.\\. \\d+ more characters".r
+
   test("no declared query plans a CartesianProduct at any scale") {
-    val offenders = SparkEntry.allQueries.flatMap { q =>
-      val plan = q.fn(spark, dir).queryExecution.executedPlan.toString
-      if (plan.contains("CartesianProduct")) Some(q.name) else None
+    // (name, truncated, cartesian) per query; a plan cut at the session's
+    // plan-string cap would pass the negative check without being read to
+    // the end.
+    val checked = SparkEntry.allQueries.map { q =>
+      val plan = executedPlanString(q.fn(spark, dir))
+      (q.name, truncationMarker.findFirstIn(plan).isDefined,
+        plan.contains("CartesianProduct"))
     }
+    val truncated = checked.collect { case (name, true, _) => name }
+    assert(truncated.isEmpty, s"truncated plan strings: ${truncated.mkString(", ")}")
+    val offenders = checked.collect { case (name, _, true) => name }
     assert(offenders.isEmpty,
       s"cartesian plans in the battery: ${offenders.mkString(", ")}")
   }

@@ -403,7 +403,7 @@ class CurationSpec extends SparkSpec {
       rows.map(r => (r.getAs[Long]("id"), r.getAs[String]("clean_text"),
         r.getAs[Long]("n_seg_kept"), r.getAs[Long]("n_seg_dropped"))).toSet
     val base = canon(out.collect())
-    val finalPlan = out.queryExecution.executedPlan.toString
+    val finalPlan = executedPlanString(out)
     assert(finalPlan.contains("isFinalPlan=true"),
       s"assertion must read the FINAL adaptive plan:\n$finalPlan")
     assert(finalPlan.contains("BroadcastHashJoin"),
@@ -417,8 +417,8 @@ class CurationSpec extends SparkSpec {
   test("decontaminate plan: benchmark shingle side is broadcast, corpus is not shuffled") {
     val train = (0 until 50).map(i => (i.toLong, s"train doc $i with words")).toDF("doc_id", "text")
     val bench = Seq((1L, "bench doc with words here")).toDF("doc_id", "text")
-    val plan = Curation.decontaminate(train, bench, "doc_id", "text", n = 4)
-      .queryExecution.executedPlan.toString
+    val plan = executedPlanString(
+      Curation.decontaminate(train, bench, "doc_id", "text", n = 4))
     // The eval-set side must reach the join as a broadcast: at 100 TB the
     // training corpus is never shuffled for this check.
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),

@@ -156,7 +156,7 @@ class DedupSpec extends SparkSpec {
 
     // The candidate probe broadcasts the batch side: the corpus signature
     // table is never shuffled for the join.
-    val plan = out.queryExecution.executedPlan.toString
+    val plan = executedPlanString(out)
     assert(plan.contains("BroadcastHashJoin"),
       s"expected broadcast candidate probe in plan:\n$plan")
   }
@@ -481,8 +481,8 @@ class DedupSpec extends SparkSpec {
     assert(out(2L) == ((2L, 0L, 0L, "", 1)))
     assert(out(3L) == ((3L, 1L, 0L, "", 1)))
     // Plan-literal OR chain: no join anywhere in the plan.
-    val plan = TextAnalysis.domainBlocklistFilter(fixture, "id", "text",
-      Seq("x.y")).queryExecution.executedPlan.toString
+    val plan = executedPlanString(TextAnalysis.domainBlocklistFilter(
+      fixture, "id", "text", Seq("x.y")))
     assert(!plan.toLowerCase.contains("join"), plan.take(300))
   }
 
@@ -789,7 +789,7 @@ class AnnSpec extends SparkSpec {
       val shuffled = Similarity.ivfTopKQuantizedServe(artifact, centroids,
         stats, df, "vec_id", "embedding", dims, k = 3, nProbe = 2,
         broadcastQueries = false)
-      val plan = shuffled.queryExecution.executedPlan.toString
+      val plan = executedPlanString(shuffled)
       assert(plan.contains("SortMergeJoin") ||
         plan.contains("ShuffledHashJoin"),
         s"cell join did not run as a shuffle join:\n$plan")
@@ -1172,7 +1172,7 @@ class AnnSpec extends SparkSpec {
       codebooks = books, nProbe = 3, cellCol = Some("cell"))
     val pruned = prunedDf.as[(Long, Long, Int, Double)].collect().toSet
     assert(pruned == plain && plain.nonEmpty)
-    val plan = prunedDf.queryExecution.executedPlan.toString
+    val plan = executedPlanString(prunedDf)
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"expected a dynamic partition pruning subtree on the float scan:\n" +
         plan.linesIterator.filter(_.contains("PartitionFilters"))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -41,6 +43,22 @@ class DocsAuditSpec extends AnyFunSuite {
       s"PLANS.md lacks sections for ${missing.size} queries " +
         s"(${missing.take(10).mkString(", ")}…) — regenerate: " +
         "sbt \"runMain graft.tools.PlanDump /root/testdata/sf0.01 docs/PLANS.md\"")
+  }
+
+  test("every in-repo SparkSession is built by graft.Sessions") {
+    // Split so this file is not itself a match.
+    val builder = "SparkSession" + ".builder"
+    val sites = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally files.close()
+    }.flatMap { f =>
+      read(f.toString).linesIterator.zipWithIndex.collect {
+        case (line, i) if line.contains(builder) => s"$f:${i + 1}"
+      }
+    }
+    assert(sites.size == 1 && sites.head.startsWith("src/main/scala/graft/Sessions.scala:"),
+      s"$builder outside the factory: ${sites.mkString(", ")}")
   }
 
   test("COVERAGE.md cites every declared query id") {

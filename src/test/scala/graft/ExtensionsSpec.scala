@@ -63,6 +63,22 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("the shared session runs the bounded-levenshtein rule without opting in") {
+    val df = pairs.filter(levenshtein(col("a"), col("b")) <= 2)
+    val levs = df.queryExecution.optimizedPlan.expressions.flatMap(_.collect {
+      case l: Levenshtein => l
+    })
+    assert(levs.nonEmpty && levs.forall(_.threshold.isDefined),
+      "the session's optimizer must rewrite to the bounded 3-arg form")
+  }
+
+  test("the shared session resolves strip_accents without registerAll") {
+    assert(spark.sql("SELECT strip_accents('é')").as[String].head() == "e")
+    // A sibling session carries the same extensions but none of the temp
+    // functions another suite may have registered on this one.
+    assert(spark.newSession().sql("SELECT strip_accents('é')").as[String].head() == "e")
+  }
+
   test("GraftExtensions registers the optimizer rule") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)

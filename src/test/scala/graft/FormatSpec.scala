@@ -28,7 +28,7 @@ class FormatSpec extends SparkSpec {
       .write.orc(s"$tmp/docs")
     val q = spark.read.orc(s"$tmp/docs")
       .filter(col("n_chars") > 100).select("doc_id", "n_chars")
-    val plan = q.queryExecution.executedPlan.toString
+    val plan = executedPlanString(q)
     assert(plan.contains("PushedFilters") &&
       plan.contains("GreaterThan(n_chars"), s"no pushdown in:\n$plan")
     assert(q.count() > 0)

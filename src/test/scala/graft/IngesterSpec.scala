@@ -215,25 +215,41 @@ class IngesterSpec extends SparkSpec {
     assert(doc1.contains("""<edge id="e0_1" source="n0" target="n1">"""))
   }
 
-  test("per-step stages over parquet checkpoints reproduce the full run") {
+  /** `Ingester.run` with the default `Config` over the fixture corpus plus
+    * a fifth doc that names Venezuela, a gazetteer country, a second time:
+    * (inputDir, outputDir). The default tagger types it LOCATION in both
+    * docs, so it becomes an across-doc location and is geocoded. */
+  private lazy val placeRun: (String, String) = {
     val in = writeFixtureCorpus()
-    val out = Files.createTempDirectory("graft-run-out").toString
-    val resumed = Files.createTempDirectory("graft-resumed-out").toString
-
-    // The place tagger feeds all three entity types through coref; a
-    // second Venezuela doc makes it an across-doc location, so the
-    // geolocation table has rows to compare.
     Files.write(Paths.get(in, "d5.txt"),
       "Maria Lopez flew from Bogota to Venezuela.".getBytes("UTF-8"))
-    Ingester.run(spark, Ingester.Config(in, out, tagger = IngesterSpec.PlaceTagger))
+    val out = Files.createTempDirectory("graft-run-out").toString
+    Ingester.run(spark, Ingester.Config(in, out))
+    (in, out)
+  }
+
+  test("default Config geocodes a gazetteer country named in two docs") {
+    val (_, out) = placeRun
+    val venezuela = spark.read.parquet(s"$out/entity")
+      .filter(col("text") === "VENEZUELA")
+      .select("type", "created_by").as[(String, String)].collect().toSeq
+    assert(venezuela == Seq(("LOCATION", "across_doc_location_coref")))
+    val geo = spark.read.parquet(s"$out/geolocation")
+      .select("name", "source", "latitude", "longitude", "country")
+      .as[(String, String, Double, Double, String)].collect().toSeq
+    assert(geo == Seq(("VENEZUELA", "GAZETTEER", 8.0, -66.0, "ve")))
+  }
+
+  test("per-step stages over parquet checkpoints reproduce the full run") {
+    val (in, out) = placeRun
+    val resumed = Files.createTempDirectory("graft-resumed-out").toString
 
     // The reference's `--coref-only` workflow: a finished run's output
     // directory holds the stage checkpoints, so the later stages re-run
     // over it, here exporting into a fresh directory.
     Ingester.corefStage(spark, out)
     Ingester.geocodeStage(spark, out)
-    Ingester.exportStage(spark, out, resumed,
-      Ingester.Config(in, resumed, tagger = IngesterSpec.PlaceTagger))
+    Ingester.exportStage(spark, out, resumed, Ingester.Config(in, resumed))
 
     // The resumed artifacts equal the run's row for row (as multisets:
     // exceptAll empty both ways).
@@ -273,8 +289,8 @@ class IngesterSpec extends SparkSpec {
 
     // The scan must prune to the queried terms' bucket partitions before
     // reading rows — that's the artifact's 100 TB story.
-    val plan = SearchIndex.lookup(spark, dir, Seq("spark", "query"))
-      .queryExecution.executedPlan.toString
+    val plan = executedPlanString(
+      SearchIndex.lookup(spark, dir, Seq("spark", "query")))
     assert(plan.contains("PartitionFilters: [") && plan.contains("bucket"),
       s"expected bucket partition pruning in:\n$plan")
 
@@ -304,8 +320,7 @@ class IngesterSpec extends SparkSpec {
     assert(tri === Map(1L -> 2L), "3-term chain incl. a repeated term")
     // The positional artifact shares build()'s bucket layout, so the
     // pruned-scan story holds for phrase queries too.
-    val plan = SearchIndex.lookup(spark, dir, Seq("big"))
-      .queryExecution.executedPlan.toString
+    val plan = executedPlanString(SearchIndex.lookup(spark, dir, Seq("big")))
     assert(plan.contains("PartitionFilters: [") && plan.contains("bucket"))
   }
 
@@ -471,15 +486,5 @@ class IngesterSpec extends SparkSpec {
     assert(enrich(2L).getString(6) == "ve")
     assert(enrich(2L).getString(7) == "PCLI")
     assert(enrich(4L).getString(6) == "mx" && enrich(4L).getDouble(1) == 21.0)
-  }
-}
-
-object IngesterSpec {
-  /** CapitalizedRunTagger with the fixture's two place names as LOCATION. */
-  object PlaceTagger extends DocumentSource.NerTagger {
-    def tag(text: String): Seq[DocumentSource.TaggedMention] =
-      DocumentSource.CapitalizedRunTagger.tag(text).map { m =>
-        if (Set("Bogota", "Venezuela")(m.text)) m.copy(mentionType = "LOCATION") else m
-      }
   }
 }

@@ -139,7 +139,7 @@ class IntervalJoinSpec extends SparkSpec {
         autoSaltFactor = 2.0)
     // the probe must have rewritten the plan to the salted form —
     // visible as the replicate-side explode over the salt sequence
-    assert(auto.queryExecution.analyzed.toString.contains("__salt"),
+    assert(withFullPlanStrings(auto.queryExecution.analyzed.toString).contains("__salt"),
       "autoSalt did not engage on an all-hot fixture")
     val got = auto.select("lid", "rid").as[(Long, Long)].collect().toSeq
     assert(got.size === got.distinct.size, "autoSalt duplicates")
@@ -151,7 +151,7 @@ class IntervalJoinSpec extends SparkSpec {
     val plain = IntervalJoin.overlapJoin(
         ul.toDF("lid", "ls", "le"), ur.toDF("rid", "rs", "re"),
         "ls", "le", "rs", "re", 100L, autoSalt = true)
-    assert(!plain.queryExecution.analyzed.toString.contains("__salt"),
+    assert(!withFullPlanStrings(plain.queryExecution.analyzed.toString).contains("__salt"),
       "autoSalt engaged on a uniform fixture")
     assert(plain.select("lid", "rid").as[(Long, Long)].collect().toSet ===
       reference(ul, ur))

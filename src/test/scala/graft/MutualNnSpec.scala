@@ -268,7 +268,7 @@ class MutualNnSpec extends SparkSpec {
     // rested on a 32-cell fixture; this pins a recall floor at a cell
     // count where the coarse machinery (√n super-cells, pruned probe)
     // is structurally exercised — the wall-clock-scale sweep is
-    // ScaleSmoke's beam_nav_coarse rows.
+    // docs/SCALE.md's beam_nav_coarse record.
     val cents = Similarity.portableCentroids(1024, dim)
     val exact = Similarity.buildNavGraph(centFrame(cents), degree = 4)
       .as[(Int, Int)].collect().toSet
@@ -323,8 +323,8 @@ class MutualNnSpec extends SparkSpec {
     // The navigability claim, spec-sized: on a 64-cell graph walked
     // with a deliberately thin beam (entry 1, degree 2, beam 2), the
     // distance-stratified far links can only widen what the walk can
-    // reach. The MEASURED improvement at scale is ScaleSmoke's
-    // beam_agree rows; here we pin the direction.
+    // reach. The MEASURED improvement at scale is docs/SCALE.md's
+    // ladder-navigability (beam_nav) record; here we pin the direction.
     val cents = Similarity.portableCentroids(64, dim)
     val want = denseAssign(cents)
     def agree(longLinks: Int): Int = {

@@ -17,11 +17,8 @@ class PlanShapeSpec extends SparkSpec {
     .map(i => i -> (0 until 30).map(j => s"t${(i * 31 + j) % 97}w$j").mkString(" "))
     .toDF("doc_id", "text")
 
-  private def planOf(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString
-
   test("SuffixDedup.duplicateSpans: one suffix range shuffle, no single-partition exchange") {
-    val plan = planOf(SuffixDedup.duplicateSpans(docs, "doc_id", "text",
+    val plan = executedPlanString(SuffixDedup.duplicateSpans(docs, "doc_id", "text",
       minLen = 5))
     assert(!plan.contains("Exchange SinglePartition"),
       "suffix dedup must not funnel through a single partition")
@@ -34,7 +31,7 @@ class PlanShapeSpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") % 2 === 0)
     val batch = docs.filter(col("doc_id") % 2 =!= 0)
     val art = SpanDedup.corpusWindowDigests(corpus, "doc_id", "text", 5)
-    val plan = planOf(SpanDedup.probeSpans(batch, "doc_id", "text", art, 5))
+    val plan = executedPlanString(SpanDedup.probeSpans(batch, "doc_id", "text", art, 5))
     assert(!plan.contains("Exchange SinglePartition"))
   }
 
@@ -45,7 +42,7 @@ class PlanShapeSpec extends SparkSpec {
     val r = (0L until 30L).map(i =>
       (100 + i) -> (0 until 8).map(j => ((i * 11 + j) % 13).toFloat / 13f)).toDF(
       "vec_id", "embedding")
-    val plan = planOf(graft.operators.Similarity.ivfMutualTop1(
+    val plan = executedPlanString(graft.operators.Similarity.ivfMutualTop1(
       l, r, "vec_id", "embedding", nLists = 4, nProbe = 2,
       fixedCentroids = Some(
         graft.operators.Similarity.portableCentroids(4, 8))))
@@ -63,7 +60,7 @@ class PlanShapeSpec extends SparkSpec {
     val r = (0L until 30L).map(i =>
       (100 + i) -> (0 until 8).map(j => ((i * 11 + j) % 13).toFloat / 13f)).toDF(
       "vec_id", "embedding")
-    val plan = planOf(graft.operators.Similarity.ivfMutualTop1Beam(
+    val plan = executedPlanString(graft.operators.Similarity.ivfMutualTop1Beam(
       l, r, "vec_id", "embedding", nLists = 4, nProbe = 2,
       beamWidth = 2, depth = 1, degree = 2, entryCells = 1,
       fixedCentroids = Some(
@@ -94,7 +91,7 @@ class PlanShapeSpec extends SparkSpec {
     val emb = (0L until 60L).map(i =>
       i -> (0 until 8).map(j => ((i * 7 + j) % 13).toFloat / 13f)).toDF(
       "vec_id", "embedding")
-    val plan = planOf(graft.operators.Similarity.ivfBeamTopK(
+    val plan = executedPlanString(graft.operators.Similarity.ivfBeamTopK(
       emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3,
       nLists = 4, beamWidth = 2, depth = 1, degree = 2, entryCells = 1,
       fixedCentroids = Some(

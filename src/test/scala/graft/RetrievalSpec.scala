@@ -93,8 +93,8 @@ class RetrievalSpec extends SparkSpec {
   test("fusion is one union + one aggregate — no join, no cartesian") {
     val a = Seq((1L, 1)).toDF("id", "rank")
     val b = Seq((2L, 1)).toDF("id", "rank")
-    val plan = Retrieval.rrfFuse(Seq("a" -> a, "b" -> b), idCols = Seq("id"))
-      .queryExecution.executedPlan.toString
+    val plan = executedPlanString(
+      Retrieval.rrfFuse(Seq("a" -> a, "b" -> b), idCols = Seq("id")))
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("Join"))
   }

@@ -24,11 +24,11 @@ class ScaleOpsSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val joined = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
-      assert(!ScaleOps.hasShuffle(joined),
+      assert(!withFullPlanStrings(ScaleOps.hasShuffle(joined)),
         "bucketed-bucketed equi-join must not exchange")
       assert(joined.count() == 5000)
       // sanity: the same join over raw (unbucketed) frames DOES shuffle
-      assert(ScaleOps.hasShuffle(left.join(right, "k")))
+      assert(withFullPlanStrings(ScaleOps.hasShuffle(left.join(right, "k"))))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
@@ -75,13 +75,11 @@ class ScaleOpsSpec extends SparkSpec {
     (1 to 5000).foreach(i => assert(check(i.toLong) === i.toLong))
     // The operator's plan must NOT collapse to a single partition the
     // way the SQL window does.
-    assert(!got.queryExecution.executedPlan.toString
-      .contains("Exchange SinglePartition"))
+    assert(!executedPlanString(got).contains("Exchange SinglePartition"))
     val windowed = df.withColumn("row_num",
       org.apache.spark.sql.functions.row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy($"id")))
-    assert(windowed.queryExecution.executedPlan.toString
-      .contains("Exchange SinglePartition"))
+    assert(executedPlanString(windowed).contains("Exchange SinglePartition"))
     // Sparse/empty range partitions keep offsets dense.
     val tiny = ScaleOps.globalRowNumbers(
       Seq(5L, 1L, 9L).toDF("id"), Seq("id"), numPartitions = 16)

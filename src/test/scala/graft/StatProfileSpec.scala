@@ -60,8 +60,8 @@ class StatProfileSpec extends SparkSpec {
     // Same shape: ONE shuffle on the group key, partial aggregation
     // map-side — the sketch is mergeable so the plan matches the exact
     // form's (HashAggregate partial -> exchange -> final).
-    val plan = TextAnalysis.statProfile(df, "g", "v", exact = false)
-      .queryExecution.executedPlan.toString
+    val plan = executedPlanString(
+      TextAnalysis.statProfile(df, "g", "v", exact = false))
     assert(plan.contains("Exchange hashpartitioning(g"), plan.take(400))
   }
 }
